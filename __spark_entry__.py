@@ -37,17 +37,18 @@ def entry(spark: SparkSession) -> DataFrame:
 #: re-confirms what actually changed first; rewrite this set each
 #: round as part of closing the round.
 TOUCHED_THIS_ROUND = {
-    "kll_matview_quantiles",  # new (r11): q-sketch matview measure
-    "order_value_quartile_bands",  # r11: unbounded quantile route
-    # rewritten as exact octave multi-select; localCheckpoint removed
-    "repeat_purchase_intervals",  # r11: oracle empty-edge coalesce
-    "spatial_neighbor_segments",  # new (r11): grid-cell distance join
-    "spatial_nearest_customer",  # new (r11): bounded-radius NN join
-    "dsir_importance_resample",  # new (r11): DSIR Gumbel top-k
-    "ewma_user_value",  # new (r11): exact integer EWMA
-    "bootstrap_ci_order_value",  # new (r11): Poisson bootstrap CI
-    "spatial_hotspot_cells",  # new (r11): cell-stencil density top-k
-    "nation_monthly_trend",  # new (r11): exact-int grouped OLS slope
+    # moved onto the one operators/asof.range_join
+    "range_join_events",
+    "purchase_window_click_join",
+    "fuzzy_name_pairs",
+    "spatial_neighbor_segments",
+    "spatial_nearest_customer",
+    # parsed-SQL ANN / rfm rewrites with no CORRECTNESS row since
+    "ann_ivfpq_topk",
+    "ann_pq_topk",
+    "ann_lsh_topk",
+    "mmr_diverse_topk",
+    "rfm_segmentation",
 }
 
 

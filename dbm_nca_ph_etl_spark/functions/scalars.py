@@ -129,7 +129,7 @@ def quote_ident(name: str) -> str:
     """Backtick-quote a column name for splicing into a parsed SQL
     fragment, doubling embedded backticks (Spark's identifier escape)
     — so the F.expr fast paths (similarity._scored_cells,
-    spatial._with_neighbour_cells, windows' refinement sub-range)
+    asof.range_join, spatial._side, windows' refinement sub-range)
     resolve exactly the column the caller named even when the name
     itself contains a backtick."""
     return "`" + name.replace("`", "``") + "`"

@@ -16,13 +16,16 @@ UDFs, no driver loops — with shapes chosen for 100 TB:
   right payload at-or-before it. One shuffle on the key, linear in
   rows, no candidate blow-up, AQE-friendly. Equal timestamps match
   (inclusive), matching DuckDB's ``ASOF JOIN`` which is the oracle.
-- :func:`range_join_buckets` — event-to-interval join. A raw
-  ``BETWEEN`` theta join is quadratic per key; bucketing the time
-  axis at ``bucket_width`` (≥ the max interval length) turns it into
-  an equi-join on (key, bucket) with each interval replicated to the
-  ≤2 buckets it spans, then an exact range filter. Candidate pairs
-  are bounded by bucket co-residency instead of |left|×|intervals|
-  per key.
+- :func:`range_join` — point-in-range join in any number of
+  dimensions, the one operator behind event-window attribution,
+  fuzzy-string blocking and grid-cell spatial joins. A raw
+  ``BETWEEN`` theta join is quadratic per key; binning every dim at
+  ``width`` turns it into an equi-join on (key, buckets) — points in
+  one bucket, ranges exploded over the buckets they cover — then an
+  exact range filter. Lossless for any width (the width only tunes
+  speed, "A Scalable and Generic Approach to Range Joins", VLDB
+  2022); candidate pairs are bounded by bucket co-residency instead
+  of |points|×|ranges| per key.
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
 
 
 def asof_join(
@@ -111,32 +116,48 @@ def asof_join(
     return matched.select(*out_cols)
 
 
-def range_join_buckets(
-    left: DataFrame,
-    intervals: DataFrame,
+def range_join(
+    points: DataFrame,
+    ranges: DataFrame,
     on: Sequence[str],
-    ts_col: str,
-    start_col: str,
-    end_col: str,
-    bucket_width: int,
+    dims: Sequence[tuple[str, str, str]],
+    width: int,
 ) -> DataFrame:
-    """Inner join of left rows to every interval containing their
-    timestamp (``start ≤ ts ≤ end``, per ``on`` key), as a bucketed
-    equi-join.
+    """Inner join of every point row to every range row that contains
+    it: equal ``on`` keys and ``lo <= p <= hi`` in each of ``dims``,
+    given as ``(point_col, lo_col, hi_col)`` triples of integer
+    columns. The output holds the columns of both sides (``on`` once);
+    apart from ``on``, the two sides' column names must differ.
 
-    ``bucket_width`` must be ≥ the longest interval so each interval
-    spans ≤ 2 buckets; intervals are exploded to their buckets
-    (``sequence`` — no driver loop), left rows map to exactly one
-    bucket, and the equi-join on (key, bucket) bounds candidates
-    before the exact ``BETWEEN`` filter. No duplicate pairs: a left
-    row lives in one bucket, and an interval appears once per bucket.
+    A binned equi-join: each point keeps one bucket ``p div width`` per
+    dim, each range explodes to ``sequence(lo div width, hi div width)``
+    per dim, and the sides equi-join on ``on`` plus the buckets before
+    the exact filter. ``div`` is monotone, so a contained point's
+    bucket lies in its range's sequence, and a sequence holds each
+    bucket once: every (point, range) pair meets exactly once, for any
+    ``width > 0`` and any sign. ``width`` only trades range-side
+    explosion (about ``len / width`` rows per dim) against candidates
+    per bucket; a width near the typical range length keeps both
+    small. Null points and null or empty (``lo > hi``) ranges match
+    nothing.
     """
+    if width < 1:
+        raise ValueError(f"width must be >= 1, got {width}")
     on = list(on)
-    b_start = (F.col(start_col) / bucket_width).cast("long")
-    b_end = (F.col(end_col) / bucket_width).cast("long")
-    iv = intervals.withColumn("_bucket", F.explode(F.sequence(b_start, b_end)))
-    lt = left.withColumn("_bucket", (F.col(ts_col) / bucket_width).cast("long"))
-    joined = lt.join(iv, on + ["_bucket"]).where(
-        F.col(ts_col).between(F.col(start_col), F.col(end_col))
+    buckets = [f"_rb{i}" for i in range(len(dims))]
+    q = [tuple(map(quote_ident, d)) for d in dims]
+    pts = points.selectExpr(
+        "*", *[f"{p} div {width} AS {b}" for (p, _, _), b in zip(q, buckets)]
     )
-    return joined.drop("_bucket")
+    # One generator per projection, so a range explodes dim by dim. The
+    # guard keeps an empty range from exploding over a descending
+    # sequence; being inside the generator, it is not pushed below the
+    # caller's projection to re-evaluate the bound expressions.
+    rng = ranges
+    for (_, lo, hi), b in zip(q, buckets):
+        seq = f"sequence({lo} div {width}, {hi} div {width})"
+        rng = rng.selectExpr(
+            "*", f"explode(CASE WHEN {lo} <= {hi} THEN {seq} END) AS {b}"
+        )
+    exact = " AND ".join(f"{p} BETWEEN {lo} AND {hi}" for p, lo, hi in q)
+    return pts.join(rng, on + buckets).where(exact).drop(*buckets)

@@ -49,6 +49,7 @@ multi-second pathology at sf0.1):
 from __future__ import annotations
 
 import json
+import math
 
 import numpy as np
 import pandas as pd
@@ -119,13 +120,15 @@ EXACT_TOPK_MAX_QUERIES = 1_000  # broadcast set × full corpus scan
 
 
 #: Session-scoped memo of PASSED guard checks, keyed on
-#: (applicationId, op, bound, analyzed-plan semanticHash). The guard
-#: is a VALIDATION, not data: within one session the same input plan
-#: re-checked on every query construction re-runs an identical
-#: bounded count job (one full driver barrier each — the ANN audits
-#: construct their exact baseline 6× per bench query). A fresh
-#: session re-validates; no row ever flows from this memo into a
-#: result.
+#: (applicationId, op, bound, analyzed-plan semanticHash, input
+#: files). The guard is a VALIDATION, not data: within one session
+#: the same input plan re-checked on every query construction re-runs
+#: an identical bounded count job (one full driver barrier each — the
+#: ANN audits construct their exact baseline 6× per bench query). A
+#: fresh session re-validates, and so does a plan whose file listing
+#: changed (a parquet file appended under the same path), so grown
+#: data is never approved by an old pass; no row ever flows from this
+#: memo into a result.
 _GUARD_MEMO: dict[tuple, bool] = {}
 
 
@@ -144,6 +147,7 @@ def scale_guard(df: DataFrame, max_rows: int, op_name: str) -> DataFrame:
             op_name,
             int(max_rows),
             df._jdf.queryExecution().analyzed().semanticHash(),
+            tuple(sorted(df.inputFiles())),
         )
     except Exception:  # noqa: BLE001 — memo is an optimization only
         key = None
@@ -253,7 +257,20 @@ def _json_lit_sql(obj: list, sql_type: str) -> str:
     """``from_json('<json>', '<sql_type>')`` SQL text for an
     arbitrarily nested constant list-of-doubles (see
     :func:`_array_lit_sql` for why). No quoting hazard: the JSON of
-    a numeric nest contains no quotes or backslashes."""
+    a numeric nest contains no quotes or backslashes.
+
+    Raises ``ValueError`` on a NaN or infinite element at any depth:
+    ``from_json`` is PERMISSIVE, so such a literal would fold to a
+    silent NULL instead of failing."""
+
+    def check(v) -> None:
+        if isinstance(v, (list, tuple)):
+            for e in v:
+                check(e)
+        elif not math.isfinite(v):
+            raise ValueError(f"non-finite element {v!r} in a {sql_type} literal")
+
+    check(obj)
     return f"from_json('{json.dumps(obj)}', '{sql_type}')"
 
 

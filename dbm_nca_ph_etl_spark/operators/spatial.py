@@ -3,35 +3,27 @@ products (100 TB mandate; the LSH discipline applied to geometry).
 
 A distance join (``all pairs within radius r``) is the spatial twin
 of near-dup detection: the naive plan is a quadratic cross join, the
-scale plan is *bucketed candidate generation*. Points are snapped to
-a square grid of side ``cell >= r``; any two points within ``r`` of
-each other must then lie in the same or in 8-adjacent cells, so the
-candidate set is exactly the equi-join of each point's HOME cell
-against its neighbours' 3x3 cell neighbourhood:
+scale plan is *bucketed candidate generation*. Both joins here are a
+2-D :func:`operators.asof.range_join` at ``width = r``: one side is
+the points, the other the boxes ``[x ± r] × [y ± r]`` around its
+points, so each box covers at most 3×3 grid cells and every
+candidate pair is generated EXACTLY once (no post-join dedup). The
+exact predicate ``dx^2 + dy^2 <= r^2`` then filters the box hits in
+integer arithmetic — no floating point anywhere, so the same rows
+survive on every engine.
 
-- one side keeps its home cell ``(cx, cy)``;
-- the other side explodes into the 9 cells of its neighbourhood;
-- a plain hash equi-join on the cell id yields every candidate pair
-  EXACTLY ONCE (the 9 exploded cells are distinct, and exactly one
-  of them equals the partner's home cell when the cells are
-  adjacent), so no post-join dedup is needed;
-- the exact predicate ``dx^2 + dy^2 <= r^2`` filters candidates in
-  integer arithmetic — no floating point anywhere, so the same rows
-  survive on every engine.
-
-Scale shape: both sides hash-partition on the cell id — a corpus-
-sized distance self-join is one shuffle, with per-cell work bounded
-by local point density, never O(n^2) in the corpus. The join is
-pinned to ``shuffle_hash`` for self-joins (the build side grows with
+Scale shape: both sides hash-partition on the cell buckets — a
+corpus-sized distance self-join is one shuffle, with per-cell work
+bounded by local point density, never O(n^2) in the corpus. The
+point side is pinned to ``shuffle_hash`` (the build side grows with
 the corpus — the dup_ngram lesson from SCALING.md: Spark's static
 size estimate can promote a corpus-sized build to BroadcastHash,
-which serially materializes it on the driver at scale). Dense cells
-are the skew case and follow operators/skew.py's guidance.
+which serially materializes it on the driver at scale); a caller
+whose probe set is bounded broadcasts it with ``F.broadcast``, and
+that hint wins. Dense cells are the skew case and follow
+operators/skew.py's guidance.
 
-Coordinates are int64 (e.g. milli-degrees or metres). ``cell`` must
-be >= the query radius; larger cells trade candidate count for fewer
-groups. Coordinates must be non-negative (integer ``div`` is used
-for cell snapping; shift negative frames before calling).
+Coordinates are int64 (e.g. milli-degrees or metres), of any sign.
 """
 
 from __future__ import annotations
@@ -39,61 +31,47 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Offsets of the 3x3 cell neighbourhood, exploded on the probe side.
-_NEIGHBOURHOOD = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
+from dbm_nca_ph_etl_spark.operators.asof import range_join
 
 
-def cell_id(x: Column, y: Column, cell: int) -> Column:
-    """Pack the grid cell of ``(x, y)`` into one int64.
+def _side(
+    df: DataFrame,
+    key: str,
+    x: str,
+    y: str,
+    s: str,
+    carry: tuple[str, ...] = (),
+    box: int | None = None,
+) -> DataFrame:
+    """Project ``df`` to ``_k{s}, _x{s}, _y{s}`` (+ ``_c_{c}_{s}`` per
+    carry column); with ``box=r`` also the bounds ``_x{s}lo/hi`` and
+    ``_y{s}lo/hi`` of the box ``[x ± r] × [y ± r]``. Parsed SQL: one
+    py4j call per side."""
+    cols = [
+        f"{quote_ident(key)} AS _k{s}",
+        f"{quote_ident(x)} AS _x{s}",
+        f"{quote_ident(y)} AS _y{s}",
+        *[f"{quote_ident(c)} AS {quote_ident(f'_c_{c}_{s}')}" for c in carry],
+    ]
+    if box is not None:
+        cols += [
+            f"{quote_ident(col)} {op} {box} AS _{axis}{s}{bound}"
+            for col, axis in ((x, "x"), (y, "y"))
+            for op, bound in (("-", "lo"), ("+", "hi"))
+        ]
+    return df.selectExpr(*cols)
 
-    ``(x div cell) * 2^31 + (y div cell)``: collision-free while
-    ``y div cell < 2^31`` — 2.1e9 cells per axis, beyond any earthly
-    frame at metre resolution. ``x - pmod(x, cell)`` makes the
-    numerator an exact multiple of ``cell``, so the double division
-    is exact for coordinates < 2^53 (int64 milli-degree / metre
-    frames sit far below that). A pack collision (possible only at
-    frame edges where a neighbour offset goes to cell -1) merges two
-    unrelated cells into one join group — it can only ADD candidate
-    pairs, never drop one, and the exact ``d2`` predicate rejects
-    them, so correctness never depends on the pack being injective.
-    """
-    qx = ((x - F.pmod(x, F.lit(cell))) / F.lit(cell)).cast("bigint")
-    qy = ((y - F.pmod(y, F.lit(cell))) / F.lit(cell)).cast("bigint")
-    return qx * F.lit(1 << 31) + qy
+
+def _box_dims(s: str, t: str) -> list[tuple[str, str, str]]:
+    """Dims of points ``s`` inside the boxes ``t``."""
+    return [(f"_{c}{s}", f"_{c}{t}lo", f"_{c}{t}hi") for c in ("x", "y")]
 
 
-def _with_home_cell(df: DataFrame, x: str, y: str, cell: int) -> DataFrame:
-    return df.withColumn(
-        "_cell", cell_id(F.col(x), F.col(y), cell).cast("bigint")
-    )
-
-
-def _with_neighbour_cells(df: DataFrame, x: str, y: str, cell: int) -> DataFrame:
-    """Explode each point into the cell ids of its 3x3 neighbourhood
-    (constant 9x amplification of the probe side only).
-
-    Built as ONE parsed SQL expression instead of ~130 Column-API
-    calls: every Column operator is a py4j round trip, and the 9
-    cell-id trees cost ~0.5 s of DRIVER time per query construction
-    (measured r11) — pure plan-building tax, paid before any task
-    runs, at any scale. The parsed tree is operator-for-operator the
-    tree the Column form built (same pmod/divide/cast/literal
-    coercions), so the analyzed plan — and every emitted value — is
-    unchanged."""
-
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    def _cid(xs: str, ys: str) -> str:
-        qx = f"CAST(({xs} - pmod({xs}, {cell})) / {cell} AS BIGINT)"
-        qy = f"CAST(({ys} - pmod({ys}, {cell})) / {cell} AS BIGINT)"
-        return f"{qx} * {1 << 31} + {qy}"
-
-    x_q, y_q = quote_ident(x), quote_ident(y)
-    ids = ", ".join(
-        _cid(f"({x_q} + {dx * cell})", f"({y_q} + {dy * cell})")
-        for dx, dy in _NEIGHBOURHOOD
-    )
-    return df.withColumn("_cell", F.expr(f"explode(array({ids}))"))
+def _d2(s: str, t: str) -> Column:
+    """Exact squared distance between points ``s`` and ``t``."""
+    dx, dy = f"(_x{s} - _x{t})", f"(_y{s} - _y{t})"
+    return F.expr(f"{dx} * {dx} + {dy} * {dy}")
 
 
 def self_pairs_within(
@@ -102,7 +80,6 @@ def self_pairs_within(
     x: str = "x",
     y: str = "y",
     radius: int = 1,
-    cell: int | None = None,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Every unordered pair of distinct points within ``radius``:
@@ -111,44 +88,17 @@ def self_pairs_within(
     column (attributes ride through the join instead of paying a
     corpus-sized re-join on the output).
 
-    One shuffle on the cell id; candidates are in-neighbourhood
-    pairs only. ``cell`` defaults to ``radius`` (the tightest grid
-    that keeps the 3x3 neighbourhood sufficient).
+    One shuffle on the cell buckets; candidates are the pairs in the
+    same or adjacent grid cells.
     """
-    cell = cell or radius
-    if cell < radius:
-        raise ValueError(f"cell {cell} < radius {radius}: pairs would be missed")
-    a = _with_home_cell(
-        pts.select(
-            F.col(key).alias("_ka"),
-            F.col(x).alias("_xa"),
-            F.col(y).alias("_ya"),
-            *[F.col(c).alias(f"_c_{c}_a") for c in carry],
-        ),
-        "_xa",
-        "_ya",
-        cell,
-    )
-    b = _with_neighbour_cells(
-        pts.select(
-            F.col(key).alias("_kb"),
-            F.col(x).alias("_xb"),
-            F.col(y).alias("_yb"),
-            *[F.col(c).alias(f"_c_{c}_b") for c in carry],
-        ),
-        "_xb",
-        "_yb",
-        cell,
-    )
-    d2 = (F.col("_xa") - F.col("_xb")) * (F.col("_xa") - F.col("_xb")) + (
-        F.col("_ya") - F.col("_yb")
-    ) * (F.col("_ya") - F.col("_yb"))
+    a = _side(pts, key, x, y, "a", carry)
+    b = _side(pts, key, x, y, "b", carry, box=radius)
+    d2 = _d2("a", "b")
     return (
         # shuffle_hash: both sides are corpus-sized — never let a
         # static size estimate promote one to a driver-built
         # broadcast (SCALING.md dup_ngram finding).
-        a.hint("shuffle_hash")
-        .join(b, "_cell")
+        range_join(a.hint("shuffle_hash"), b, [], _box_dims("a", "b"), radius)
         .where((F.col("_ka") < F.col("_kb")) & (d2 <= F.lit(radius * radius)))
         .select(
             F.col("_ka").alias(f"{key}_a"),
@@ -171,54 +121,26 @@ def join_within(
     x: str = "x",
     y: str = "y",
     radius: int = 1,
-    cell: int | None = None,
-    broadcast_probes: bool = False,
 ) -> DataFrame:
     """All (probe, target) pairs within ``radius``: columns
-    ``probe_key, target_key, d2``. The probe side pays the 9x
-    neighbourhood explosion; set ``broadcast_probes`` when it is a
-    bounded query set (a k-NN request batch), which turns the whole
-    join into a map-only pass over the target corpus.
+    ``probe_key, target_key, d2``. The probe side pays the ≤3×3 box
+    explosion; pass ``F.broadcast(probes)`` when it is a bounded query
+    set (a k-NN request batch), which turns the whole join into a
+    map-only pass over the target corpus.
     """
-    cell = cell or radius
-    if cell < radius:
-        raise ValueError(f"cell {cell} < radius {radius}: pairs would be missed")
-    p = _with_neighbour_cells(
-        probes.select(
-            F.col(probe_key).alias("_pk"),
-            F.col(x).alias("_px"),
-            F.col(y).alias("_py"),
-        ),
-        "_px",
-        "_py",
-        cell,
-    )
-    t = _with_home_cell(
-        targets.select(
-            F.col(target_key).alias("_tk"),
-            F.col(x).alias("_tx"),
-            F.col(y).alias("_ty"),
-        ),
-        "_tx",
-        "_ty",
-        cell,
-    )
-    if broadcast_probes:
-        p = F.broadcast(p)
-    else:
-        # both sides corpus-sized: pin a distributed strategy so a
-        # static-size mis-estimate cannot promote either to a
-        # driver-built broadcast (SCALING.md dup_ngram finding)
-        t = t.hint("shuffle_hash")
-    d2 = (F.col("_px") - F.col("_tx")) * (F.col("_px") - F.col("_tx")) + (
-        F.col("_py") - F.col("_ty")
-    ) * (F.col("_py") - F.col("_ty"))
+    t = _side(targets, target_key, x, y, "t")
+    p = _side(probes, probe_key, x, y, "p", box=radius)
+    d2 = _d2("p", "t")
     return (
-        t.join(p, "_cell")
+        # both sides corpus-sized unless the caller broadcast the
+        # probes: pin a distributed strategy so a static-size
+        # mis-estimate cannot promote the corpus to a driver-built
+        # broadcast (SCALING.md dup_ngram finding)
+        range_join(t.hint("shuffle_hash"), p, [], _box_dims("t", "p"), radius)
         .where(d2 <= F.lit(radius * radius))
         .select(
-            F.col("_pk").alias(probe_key),
-            F.col("_tk").alias(target_key),
+            F.col("_kp").alias(probe_key),
+            F.col("_kt").alias(target_key),
             d2.cast("bigint").alias("d2"),
         )
     )

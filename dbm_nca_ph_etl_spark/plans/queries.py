@@ -1824,7 +1824,7 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY e.error_id, e.user_id
     """,
     doc="Interval join: clicks within 6 h after each error, "
-    "per user (operators/asof.py range_join_buckets — bucketed "
+    "per user (operators/asof.range_join at width 6 h — binned "
     "equi-join prefilter, never |events|x|intervals| per key).",
     tags=("join", "events"),
 )
@@ -1837,14 +1837,12 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts_us") + F.lit(21_600_000_000)).alias("end_us"),
     )
     clk = ev.where(F.col("event_type") == "click").select("user_id", "ts_us", "value")
-    j = A.range_join_buckets(
+    j = A.range_join(
         clk,
         err,
         on=["user_id"],
-        ts_col="ts_us",
-        start_col="start_us",
-        end_col="end_us",
-        bucket_width=21_600_000_000,
+        dims=[("ts_us", "start_us", "end_us")],
+        width=21_600_000_000,
     )
     return j.groupBy("error_id", "user_id").agg(
         F.count(F.lit(1)).alias("n_clicks"),
@@ -12187,24 +12185,23 @@ def merkle_orders_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE levenshtein(a.s, b.s) BETWEEN 1 AND 4
     """,
     doc="Fuzzy string near-dup pairs over part names: edit distance "
-    "≤ 4 via the length-band-blocked Levenshtein self-join "
+    "≤ 4 via the length-blocked Levenshtein self-join "
     "(operators/dedup.levenshtein_blocked_pairs) — the typo/OCR/"
     "variant detector set-similarity joins miss because a 1-char "
     "edit inside a token changes the whole shingle. Blocking is "
-    "lossless: lev ≥ |len diff|, so ≤4-distance pairs live in the "
-    "same or adjacent len-div-4 band, and each string probes "
-    "exactly 2 buckets (an equi-join after a 2-element explode, "
-    "never a cross join); the DP itself runs JVM-side with the "
-    "threshold argument early-exiting at 5. Distinct-first shrinks "
-    "the join quadratically for catalogs of repeated names. The "
-    "oracle's length predicate admits a superset of the bands' "
-    "candidates; the distance filter equalizes both (band-missed "
-    "pairs have len diff ≥ 5 ⇒ dist ≥ 5).",
+    "lossless: lev ≥ |len diff|, so each string only needs the "
+    "strings whose length lies in [len, len + 4] — a 1-D "
+    "operators/asof.range_join self-join at width 4 (an equi-join "
+    "on length buckets, never a cross join); the DP itself runs "
+    "JVM-side with the threshold argument early-exiting at 5. "
+    "Distinct-first shrinks the join quadratically for catalogs of "
+    "repeated names. The oracle's length predicate admits exactly "
+    "the range join's pairs.",
     tags=("dedup", "text", "bench"),
 )
 def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _t(spark, sf_dir, "part")
-    pairs = D.levenshtein_blocked_pairs(p, "p_name", max_dist=4, band=4)
+    pairs = D.levenshtein_blocked_pairs(p, "p_name", max_dist=4)
     return pairs.select("text_a", "text_b", F.col("dist").cast("int").alias("dist"))
 
 
@@ -12872,14 +12869,13 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(how many purchases had 0, 1, 2... supporting clicks — the "
     "multi-touch companion to attribution_last_touch). The oracle "
     "states it as a range join (DuckDB's IEJoin eats it); the Spark "
-    "plan uses the BUCKETED form every range join at scale reduces "
-    "to: an hour-long window spans at most 2 hour buckets, so each "
-    "purchase explodes to its 2 candidate (user, hour) keys and the "
-    "join is pure equi-join on (user_id, hour_bucket) — shuffle-"
-    "hashable, prunable, no range-predicate nested loop anywhere. "
-    "A click matches exactly one candidate bucket of a given "
-    "purchase (its own), so no dedup step is needed; unmatched "
-    "purchases rejoin with count 0 via the left spine.",
+    "plan is operators/asof.range_join, the BINNED form every range "
+    "join at scale reduces to: each purchase's window [t - 1 h, "
+    "t - 1] spans at most 2 hour buckets, and the join is a pure "
+    "equi-join on (user_id, hour bucket) — shuffle-hashable, "
+    "prunable, no range-predicate nested loop anywhere. Each (click, "
+    "purchase) pair meets exactly once, so no dedup step is needed; "
+    "unmatched purchases rejoin with count 0 via the left spine.",
     tags=("relational", "events", "bench"),
 )
 def purchase_window_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12891,24 +12887,14 @@ def purchase_window_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cents(F.col("value")).alias("cents"),
     )
     clk = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("ts_us").alias("ct"),
-        F.expr(f"ts_us div {_US_PER_HOUR}").alias("hb"),
+        "user_id", F.col("ts_us").alias("ct")
     )
-    cand = pur.withColumn(
-        "hb",
-        F.explode(
-            F.array(
-                F.expr(f"t div {_US_PER_HOUR} - 1"),
-                F.expr(f"t div {_US_PER_HOUR}"),
-            )
-        ),
+    window = pur.selectExpr(
+        "event_id", "user_id", f"t - {_US_PER_HOUR} AS lo", "t - 1 AS hi"
     )
     hits = (
-        cand.join(clk, ["user_id", "hb"])
-        .where(
-            (F.col("ct") < F.col("t"))
-            & (F.col("ct") >= F.col("t") - _US_PER_HOUR)
+        A.range_join(
+            clk, window, ["user_id"], [("ct", "lo", "hi")], width=_US_PER_HOUR
         )
         .groupBy("event_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_clicks"))
@@ -14421,13 +14407,14 @@ _SQL_COORD = (
     "self_pairs_within): all customer pairs within radius 500 on an "
     "md5-scattered 100k x 100k integer frame, rolled up by market-"
     "segment pair. The Spark plan is the grid-cell candidate join — "
-    "home cell vs exploded 3x3 neighbourhood, each candidate pair "
+    "a 2-D operators/asof.range_join of points against the boxes "
+    "[x ± 500] x [y ± 500] at width 500, each candidate pair "
     "generated EXACTLY once, exact int64 d2 filter, shuffle_hash-"
     "pinned (both sides corpus-sized) — while the DuckDB oracle runs "
     "the naive quadratic join: the hash gate proves the bucketed "
     "plan enumerates the identical pair set. One shuffle on the "
-    "cell id; per-cell work bounded by local density, never O(n^2) "
-    "in the corpus; dense cells are the skew.py case.",
+    "cell buckets; per-cell work bounded by local density, never "
+    "O(n^2) in the corpus; dense cells are the skew.py case.",
     tags=("spatial", "join", "bench"),
 )
 def spatial_neighbor_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -14493,8 +14480,9 @@ def spatial_neighbor_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Bounded-radius nearest-neighbour join (operators/spatial."
     "join_within): each supplier's closest customer within radius "
     "2000 on the shared md5-scattered frame, ties broken by "
-    "customer key. The probe side (suppliers) pays the 9x cell "
-    "explosion and is BROADCAST — the whole k-NN pass is map-only "
+    "customer key. The probe side (suppliers) pays the ≤3x3 box "
+    "explosion of the 2-D operators/asof.range_join at width 2000 "
+    "and is BROADCAST — the whole k-NN pass is map-only "
     "over the customer corpus, zero shuffle before the per-probe "
     "top-1 (a probe-count-sized window). Suppliers with no customer "
     "in radius drop out (89/100 match at sf0.01), exactly like the "
@@ -14514,7 +14502,7 @@ def spatial_nearest_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
         _coord(F.concat(F.lit("s"), F.col("s_suppkey").cast("string")), "#y").alias("y"),
     )
     cand = SP.join_within(
-        sp, cp, "s_suppkey", "c_custkey", radius=2000, broadcast_probes=True
+        F.broadcast(sp), cp, "s_suppkey", "c_custkey", radius=2000
     )
     # argmin as a PACKED-LONG AGGREGATE, not a window: the radius
     # filter guarantees d2 <= 4e6 (< 2^22), so min(d2 * 2^41 +

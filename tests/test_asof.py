@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import random
+from collections import Counter
 
-from dbm_nca_ph_etl_spark.operators.asof import asof_join, range_join_buckets
+import pytest
+
+from dbm_nca_ph_etl_spark.operators.asof import asof_join, range_join
 
 LEFT = [
     # (id, key, ts)
@@ -98,20 +101,58 @@ def test_asof_preserves_left_rows_and_columns(spark):
     assert df.columns == ["id", "key", "ts", "asof_ts", "asof_rid", "asof_val"]
 
 
+def _random_range_join_case(rng, ndim, n_points=60, n_ranges=40):
+    """Points and ranges over a signed frame: null keys, null point
+    and bound coordinates, zero-length and empty (lo > hi) ranges."""
+
+    def maybe(v):
+        return None if rng.random() < 0.08 else v
+
+    keys = ["a", "b", None]
+    points = [
+        (pid, rng.choice(keys), *(maybe(rng.randint(-60, 60)) for _ in range(ndim)))
+        for pid in range(n_points)
+    ]
+    ranges = []
+    for rid in range(n_ranges):
+        bounds = []
+        for _ in range(ndim):
+            lo = rng.randint(-70, 60)
+            hi = lo + rng.choice([-5, -1, 0, 0, 1, 3, 9, 20, 20])
+            bounds += [maybe(lo), maybe(hi)]
+        ranges.append((rid, rng.choice(keys), *bounds))
+    return points, ranges
+
+
 def test_range_join_matches_brute_force(spark):
-    l, r = _frames(spark)
-    iv = r.select(
-        "rid", "key", F.col("ts").alias("start"), (F.col("ts") + 100).alias("end")
-    )
-    fast = range_join_buckets(
-        l, iv, on=["key"], ts_col="ts", start_col="start", end_col="end",
-        bucket_width=100,
-    )
-    brute = l.join(iv, ["key"]).where(
-        F.col("ts").between(F.col("start"), F.col("end"))
-    )
-    key = lambda rows: sorted((r.id, r.rid) for r in rows)  # noqa: E731
-    fast_pairs, brute_pairs = key(fast.collect()), key(brute.collect())
-    assert fast_pairs == brute_pairs
-    assert len(fast_pairs) == len(set(fast_pairs)), "no duplicate pairs"
-    assert fast_pairs  # non-trivial fixture
+    """range_join equals a nested-loop twin as an exact multiset (a
+    duplicated pair fails) in 1-D and 2-D, for widths of 1, below,
+    at and above the longest range (20)."""
+    rng = random.Random(20240611)
+    for ndim in (1, 2):
+        points, ranges = _random_range_join_case(rng, ndim)
+        pcols = [f"p{d}" for d in range(ndim)]
+        rcols = [c for d in range(ndim) for c in (f"lo{d}", f"hi{d}")]
+        schema = lambda cols: ", ".join(f"{c} long" for c in cols)  # noqa: E731
+        pdf = spark.createDataFrame(points, f"pid long, key string, {schema(pcols)}")
+        rdf = spark.createDataFrame(ranges, f"rid long, key string, {schema(rcols)}")
+        dims = [(f"p{d}", f"lo{d}", f"hi{d}") for d in range(ndim)]
+        want = Counter(
+            (pid, rid)
+            for pid, pk, *pv in points
+            for rid, rk, *rv in ranges
+            if pk is not None
+            and pk == rk
+            and all(
+                None not in (p, lo, hi) and lo <= p <= hi
+                for p, lo, hi in zip(pv, rv[0::2], rv[1::2])
+            )
+        )
+        assert want, "non-trivial fixture"
+        for width in (1, 7, 20, 45):
+            out = range_join(pdf, rdf, ["key"], dims, width)
+            assert out.columns == ["key", "pid", *pcols, "rid", *rcols]
+            got = Counter((r.pid, r.rid) for r in out.collect())
+            assert got == want, f"ndim={ndim} width={width}"
+    with pytest.raises(ValueError, match="width"):
+        range_join(pdf, rdf, ["key"], dims, 0)

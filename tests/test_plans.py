@@ -874,9 +874,9 @@ class TestRound7Sequential:
             levenshtein_blocked_pairs,
         )
 
-        # 'old rod' (len 7, band 1) vs 'cold rod' (len 8, band 2):
-        # cross-band AND lexically opposite to the length order — the
-        # pair a probe-up-only + a<b filter would silently drop.
+        # 'old rod' (len 7, bucket 1) vs 'cold rod' (len 8, bucket 2):
+        # unequal lengths AND lexically opposite to the length order —
+        # the pair a shorter-probes-longer + a<b filter would drop.
         df = spark.createDataFrame(
             [("old rod",), ("cold rod",), ("cold rat",), ("zzzzzzzzzzzzzzzz",)],
             "s string",

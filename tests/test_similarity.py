@@ -506,3 +506,26 @@ class TestMarginTopk:
             emb, emb.where("vec_id = 0"), k=2, m=1, max_queries=None
         ).collect()
         assert got[0].neighbor_id == 1 and got[0].margin_ppm > 1_000_000
+
+
+def test_json_literal_rejects_non_finite():
+    from dbm_nca_ph_etl_spark.operators.similarity import _json_lit_sql
+
+    assert _json_lit_sql([[0.5, -1.0]], "array<array<double>>") == (
+        "from_json('[[0.5, -1.0]]', 'array<array<double>>')"
+    )
+    # from_json would fold these to a silent NULL
+    for bad in ([1.0, math.nan], [[[0.0], [-math.inf]]]):
+        with pytest.raises(ValueError, match="non-finite"):
+            _json_lit_sql(bad, "array<double>")
+
+
+def test_scale_guard_rechecks_appended_files(spark, tmp_path):
+    from dbm_nca_ph_etl_spark.operators.similarity import scale_guard
+
+    path = str(tmp_path / "guarded")
+    spark.range(3).write.parquet(path)
+    scale_guard(spark.read.parquet(path), 4, "guard_probe")  # passes, memoized
+    spark.range(3).write.mode("append").parquet(path)
+    with pytest.raises(ValueError, match="refuses >4"):
+        scale_guard(spark.read.parquet(path), 4, "guard_probe")

@@ -65,24 +65,6 @@ def test_self_pairs_exactly_once_no_dedup_needed(spark, pts_df):
     assert all(r.k_a < r.k_b for r in rows)
 
 
-def test_wider_cell_same_answer(spark, pts_df):
-    # cell > radius trades more candidates for fewer groups; the
-    # answer must not move
-    pts = _mk_points(300)
-    got = {
-        (r.k_a, r.k_b, r.d2)
-        for r in SP.self_pairs_within(pts_df, "k", radius=50, cell=170).collect()
-    }
-    assert got == _brute_pairs(pts, 50)
-
-
-def test_cell_smaller_than_radius_refused(spark, pts_df):
-    with pytest.raises(ValueError, match="pairs would be missed"):
-        SP.self_pairs_within(pts_df, "k", radius=100, cell=60)
-    with pytest.raises(ValueError, match="pairs would be missed"):
-        SP.join_within(pts_df, pts_df, "k", "k", radius=100, cell=60)
-
-
 def test_carry_columns_ride_through(spark, pts_df):
     rows = SP.self_pairs_within(
         pts_df, "k", radius=120, carry=("grp",)
@@ -109,15 +91,14 @@ def test_join_within_matches_brute_force(spark, pts_df):
         got = {
             (r.pk, r.k, r.d2)
             for r in SP.join_within(
-                probes,
+                F.broadcast(probes) if bcast else probes,
                 pts_df,
                 "pk",
                 "k",
                 radius=75,
-                broadcast_probes=bcast,
             ).collect()
         }
-        assert got == want, f"broadcast_probes={bcast}"
+        assert got == want, f"broadcast probes={bcast}"
 
 
 def test_edge_cells_negative_neighbour_offsets(spark):
@@ -149,25 +130,18 @@ def test_plan_no_cartesian_and_shuffle_hash(spark, pts_df):
 def test_plan_broadcast_probes_is_map_only(spark, pts_df):
     probes = spark.createDataFrame([Row(pk=1, x=10, y=10)])
     plan = (
-        SP.join_within(
-            pts_df.select("k", "x", "y"),
-            pts_df,
-            "k",
-            "k",
-            radius=50,
-            broadcast_probes=False,
-        )
+        SP.join_within(pts_df.select("k", "x", "y"), pts_df, "k", "k", radius=50)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     bplan = (
-        SP.join_within(
-            probes, pts_df, "pk", "k", radius=50, broadcast_probes=True
-        )
+        SP.join_within(F.broadcast(probes), pts_df, "pk", "k", radius=50)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
+    # the caller's broadcast hint wins over the pinned shuffle_hash
     assert "BroadcastHashJoin" in bplan
+    assert "ShuffledHashJoin" in plan, plan
     assert "CartesianProduct" not in plan + bplan
