@@ -37,17 +37,28 @@ def entry(spark: SparkSession) -> DataFrame:
 #: re-confirms what actually changed first; rewrite this set each
 #: round as part of closing the round.
 TOUCHED_THIS_ROUND = {
-    # moved onto the one operators/asof.range_join
+    # similarity-tagged queries whose plan changed with the one ANN
+    # pipeline (side projection, candidate join, scorer, top-k)
+    "ann_lsh_topk",
+    "ann_rp_topk",
+    "ann_int8_topk",
+    "ann_pq_topk",
+    "ann_ivfpq_topk",
+    "ann_pca_topk",
+    "embedding_near_dup_pairs",
+    "embedding_near_dup_lsh",
+    "semantic_dedup_keep",
+    "hybrid_search_rrf",
+    "mmr_diverse_topk",
+    "margin_mined_pairs",
+    "embedding_moment_matrix",
+    "retrieval_eval_int8",
+    # changed earlier, still without a CORRECTNESS row since
     "range_join_events",
     "purchase_window_click_join",
     "fuzzy_name_pairs",
     "spatial_neighbor_segments",
     "spatial_nearest_customer",
-    # parsed-SQL ANN / rfm rewrites with no CORRECTNESS row since
-    "ann_ivfpq_topk",
-    "ann_pq_topk",
-    "ann_lsh_topk",
-    "mmr_diverse_topk",
     "rfm_segmentation",
 }
 

@@ -1,15 +1,29 @@
 """Similarity search over embedding columns (north-star extension).
 
-- :func:`cosine_topk` — brute-force exact top-k: broadcast the
-  (small) query set against the corpus, dot-product via array HOFs
-  (JVM-side), rank with a per-query window. The correctness baseline
-  and the right plan whenever |queries| is small: one broadcast, one
-  shuffle (the window's partitionBy query_id).
-- :func:`lsh_bucket_topk` — the scale path: random-hyperplane LSH
-  (sign-of-dot-product with deterministic seeded planes) buckets both
-  sides; candidates are only corpus vectors sharing a bucket, then
-  exact re-rank. Sub-linear candidate sets at 100 TB; recall tunable
-  by number of tables/planes.
+Every top-k operator is one pipeline of three stages:
+
+1. a **candidate generator** picks the (query, corpus) pairs worth
+   scoring: the whole corpus (:func:`cosine_topk`, :func:`int8_topk`,
+   :func:`pq_topk`), the probed IVF cells (:func:`ivf_topk`,
+   :func:`ivfpq_topk`), the LSH first-collision branches
+   (:func:`lsh_bucket_topk`) or the ``n_cand`` best in a projected
+   space (:func:`rp_topk`, :func:`pca_topk`);
+2. a **scorer** gives each pair the operator's declared score as one
+   parsed SQL expression: the exact cosine (``_QC_COSINE``), the
+   integer int8 cosine (``_INT8_COSINE``) or the PQ asymmetric-distance
+   cosine (:func:`_pq_adc_cosine_sql`). A quantized operator ranks by
+   its quantized score; nothing reranks it exactly;
+3. the one :func:`_top_k` numbers each query's pairs by score
+   descending, then neighbor id ascending, and keeps rank ≤ k.
+
+Both sides enter through :func:`_side`, which resolves the caller's
+id and vector columns through ``quote_ident`` (a name such as
+``emb.v`` is a top-level column on every operator, never a struct
+field) and hoists the row norm. The candidate join is
+:func:`_candidates`: broadcast queries × corpus, cross or on the IVF
+``cell``, self pairs dropped. The near-duplicate pair operators reuse
+the sides and the exact scorer with an ``id_a < id_b`` predicate and
+a threshold instead of a top-k.
 
 All distance math is double-precision, left-to-right ``aggregate``
 folds, so the DuckDB oracle (list_dot_product) reproduces values
@@ -21,24 +35,27 @@ multi-second pathology at sf0.1):
 - **Hoist norms out of pair expressions.** ``zip_with``/``aggregate``
   are CodegenFallback: every occurrence is an interpreted per-row
   lambda walk. ``cos = dot(a,b)/(|a|·|b|)`` evaluated per *pair* costs
-  three folds; computing ``|v|`` once per *row* and carrying it
-  through the join leaves one fold per pair — bit-identical output
-  (same doubles, same division) at a third of the interpreted work.
-- **Array literals in one py4j call.** ``F.array(*map(F.lit, vals))``
-  is one Python↔JVM round-trip per element — ~4,600 round-trips
-  (2-3 s of driver time) for a 6-table × 6-plane × 64-dim LSH plan.
-  ``F.lit(list)`` builds the same literal in one call
-  (:func:`_plane_lit`).
+  three folds; computing ``|v|`` once per *row* (:func:`_side`) and
+  carrying it through the join leaves one fold per pair —
+  bit-identical output (same doubles, same division) at a third of
+  the interpreted work.
+- **Constants and folds as parsed SQL.** ``F.array(*map(F.lit,
+  vals))`` is one Python↔JVM round-trip per element — ~4,600
+  round-trips (2-3 s of driver time) for a 6-table × 6-plane × 64-dim
+  LSH plan. A constant vector or matrix is one ``from_json`` literal
+  (:func:`_json_lit_sql`) that constant-folds away, and the dot,
+  norm and cosine folds are SQL text (:func:`_dot_sql`,
+  :func:`_l2_sql`): one parse instead of ~15 py4j calls per fold.
 - **No distinct over candidate pairs.** Multi-table LSH dedups pairs
   by keeping a pair only in its *first* colliding table
-  (:func:`_first_collision`) — a scalar predicate on the bucket-join
+  (:func:`_lsh_candidates`) — a scalar predicate on the bucket-join
   output, replacing a dropDuplicates shuffle that hauled both 64-dim
   vectors per candidate row.
 - **posexplode_outer, not posexplode.** Non-outer generate plants a
   ``size(sigs) > 0`` pre-filter that re-evaluates the full 36-fold
   signature array per row and gets pushed into the parquet scan as a
-  row-level DataFilter; the signature array is never empty, so the
-  outer variant is semantically identical and skips both.
+  row-level DataFilter; when the array is never empty, the outer
+  variant is semantically identical and skips both.
 - **Unrolled element_at dot products are a trap.** Expanding the
   64-term sum into flat arithmetic looks codegen-friendly but builds
   128-deep Add trees that blow past codegen method limits and fall
@@ -50,46 +67,21 @@ from __future__ import annotations
 
 import json
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def dot(a: Column, b: Column) -> Column:
-    """Σ a[i]*b[i] in double precision (sequential left-to-right fold,
-    matching DuckDB's list fold bit-for-bit)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def _paired_cosine(va: Column, vb: Column, na: Column, nb: Column) -> Column:
-    """cos(a,b) from vectors + hoisted norms: one fold per pair.
-    Bit-identical to :func:`cosine` — same dot fold, same ``/(na*nb)``."""
-    return F.round(dot(va, vb) / (na * nb), 6)
+from dbm_nca_ph_etl_spark.functions.scalars import let, quote_ident
 
 
 def _dot_sql(a: str, b: str) -> str:
-    """SQL text of :func:`dot` over two column names/fragments —
-    parses to the operator-identical tree (same zip_with/aggregate
-    fold, same casts, same 0.0D seed), so every emitted value is
-    bit-identical; ONE expr parse instead of ~15 py4j round trips
-    (r12 — the _scored_cells driver-tax treatment applied to the
-    paired-cosine trees the ANN family builds per construction)."""
+    """Σ a[i]*b[i] in double precision over two column names or SQL
+    fragments: a sequential left-to-right fold, matching DuckDB's list
+    fold bit-for-bit. Parsed SQL, so a fold costs one parse instead of
+    ~15 py4j round trips per construction."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -98,7 +90,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _l2_sql(a: str) -> str:
-    """SQL text of :func:`l2_norm` — same fold, same casts."""
+    """|a| as SQL text — the :func:`_dot_sql` fold over a·a."""
     return (
         f"SQRT(aggregate({a}, 0.0D, "
         "(acc, x) -> acc + (CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
@@ -106,8 +98,70 @@ def _l2_sql(a: str) -> str:
 
 
 def _paired_cosine_sql(va: str, vb: str, na: str, nb: str) -> str:
-    """SQL text of :func:`_paired_cosine` over column names."""
+    """cos(a, b) from two vectors and their hoisted norms, rounded to
+    6 dp: one fold per pair."""
     return f"round({_dot_sql(va, vb)} / ({na} * {nb}), 6)"
+
+
+#: Output names (id, vector, norm) of each side role: the query and
+#: corpus sides of a top-k, the two sides of a near-dup pair, and the
+#: role-free row of an index table (LSH signatures, projections).
+_ROLES = {
+    "q": ("query_id", "_qv", "_qn"),
+    "c": ("neighbor_id", "_cv", "_cn"),
+    "a": ("id_a", "_va", "_na"),
+    "b": ("id_b", "_vb", "_nb"),
+    "": ("id", "_v", "_n"),
+}
+
+#: The exact scorers: over a top-k candidate row, over a near-dup pair.
+_QC_COSINE = _paired_cosine_sql("_qv", "_cv", "_qn", "_cn")
+_AB_COSINE = _paired_cosine_sql("_va", "_vb", "_na", "_nb")
+
+
+def _side(
+    df: DataFrame, role: str, id_col: str, vec_col: str, *extra: Column
+) -> DataFrame:
+    """The one side projection: ``(id, vector, norm, *extra)`` named
+    per ``_ROLES[role]``. The caller's id and vector columns resolve
+    through ``quote_ident``, and the norm is the hoisted per-row
+    :func:`_l2_sql` fold. ``extra`` are Columns over ``df`` (cells,
+    quantized codes, projections); a side without them is one
+    ``selectExpr`` parse."""
+    idn, vn, nn = _ROLES[role]
+    idq, vq = quote_ident(id_col), quote_ident(vec_col)
+    cols = (f"{idq} AS {idn}", f"{vq} AS {vn}", f"{_l2_sql(vq)} AS {nn}")
+    if not extra:
+        return df.selectExpr(*cols)
+    return df.select(*map(F.expr, cols), *extra)
+
+
+def _candidates(q: DataFrame, c: DataFrame, on: str | None = None) -> DataFrame:
+    """The one candidate join: the broadcast query side × the corpus
+    side, as a cross join or an equi-join ``on`` the IVF cell, minus
+    self pairs."""
+    bq = F.broadcast(q)
+    pairs = bq.crossJoin(c) if on is None else bq.join(c, on)
+    return pairs.where("query_id != neighbor_id")
+
+
+def _score(cand: DataFrame, score_sql: str = _QC_COSINE) -> DataFrame:
+    """The scorer stage: ``(query_id, neighbor_id, cos_sim)`` with the
+    operator's declared score over each candidate row."""
+    return cand.selectExpr("query_id", "neighbor_id", f"{score_sql} AS cos_sim")
+
+
+def _top_k(scored: DataFrame, k: int, score: str = "cos_sim") -> DataFrame:
+    """The one ranking stage: per query, ``score`` descending then
+    ``neighbor_id`` ascending — a total order, so the result is
+    partition-invariant — numbered by ``row_number`` into a ``rank``
+    column appended to ``scored``'s, cut at ``k``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return scored.select("*", F.row_number().over(w).alias("rank")).where(
+        F.col("rank") <= k
+    )
 
 
 #: Fail-fast ceilings for the two labeled exact baselines. These are
@@ -176,9 +230,9 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector.
 
-    Output: (query_id, neighbor_id, cos_sim) — self-matches excluded,
-    similarity rounded to 6 dp, ties broken by neighbor id so results
-    are total-order deterministic.
+    Output: (query_id, neighbor_id, cos_sim, rank) — self-matches
+    excluded, similarity rounded to 6 dp, ties broken by neighbor id
+    so results are total-order deterministic.
 
     EXACT BASELINE: every query scans the whole corpus (broadcast
     q × c). The corpus side is linear and distributed, but the cost
@@ -186,40 +240,10 @@ def cosine_topk(
     LSH/IVF operators are the scale path; this is their labeled
     recall oracle). The guard runs a bounded count at call time.
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     queries = scale_guard(queries, max_queries, "cosine_topk")
-    # Projections and the pair cosine as parsed SQL (r12): the tree
-    # is operator-identical to the Column form (same folds, casts,
-    # rounding), but one parse replaces the per-construction py4j
-    # round-trips — this operator is rebuilt 6×/bench-query as the
-    # exact baseline of every ANN audit.
-    idq, vq = quote_ident(id_col), quote_ident(vec_col)
-    q = queries.selectExpr(
-        f"{idq} AS query_id", f"{vq} AS _qv", f"{_l2_sql(vq)} AS _qn"
-    )
-    c = corpus.selectExpr(
-        f"{idq} AS neighbor_id", f"{vq} AS _cv", f"{_l2_sql(vq)} AS _cn"
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_paired_cosine_sql('_qv', '_cv', '_qn', '_cn')} AS cos_sim",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    q = _side(queries, "q", id_col, vec_col)
+    c = _side(corpus, "c", id_col, vec_col)
+    return _top_k(_score(_candidates(q, c)), k)
 
 
 def _hyperplane(dim: int, seed: int) -> list[float]:
@@ -274,31 +298,6 @@ def _json_lit_sql(obj: list, sql_type: str) -> str:
     return f"from_json('{json.dumps(obj)}', '{sql_type}')"
 
 
-def _plane_lit(vals: list[float]) -> Column:
-    """Array-of-doubles literal parsed JVM-side in ONE py4j call.
-    ``F.array(*map(F.lit, vals))`` is a py4j round-trip per element
-    and even ``F.lit(list)`` converts element-wise (~1.2 s of driver
-    time for a 36×64 plane set); an expr string is microseconds."""
-    return F.expr(_array_lit_sql(vals))
-
-
-def _plane_matrix_lit(planes: list[list[float]]) -> Column:
-    """array<array<double>> literal (all planes) in one py4j call."""
-    return F.expr(_json_lit_sql(planes, "array<array<double>>"))
-
-
-def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: one sign bit per plane, packed to
-    a bigint bucket key."""
-    bits = [
-        F.when(dot(vec, _plane_lit(plane)) >= 0, 1).otherwise(0) for plane in planes
-    ]
-    key = F.lit(0).cast("bigint")
-    for i, b in enumerate(bits):
-        key = key + (b.cast("bigint") * F.lit(2**i).cast("bigint"))
-    return key
-
-
 def _signed(
     df: DataFrame,
     id_col: str,
@@ -349,31 +348,43 @@ def _signed(
         keys = bits.reshape(len(v), -1, num_planes) @ packer  # batch × tables
         return pd.Series(list(keys.astype(np.int64)))
 
-    signed = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        bucket_keys(F.col(vec_col)).alias("_keys"),
+    signed = _side(
+        df, "", id_col, vec_col,
+        bucket_keys(F.col(quote_ident(vec_col))).alias("_keys"),
     )
-    keys = [
-        F.element_at("_keys", t + 1).alias(f"_b{t}") for t in range(num_tables)
-    ]
-    return signed.select("id", "_v", "_n", *keys).localCheckpoint(eager=True)
+    keys = [f"element_at(_keys, {t + 1}) AS _b{t}" for t in range(num_tables)]
+    return signed.selectExpr("id", "_v", "_n", *keys).localCheckpoint(eager=True)
 
 
-def _first_collision_cond(a: str, b: str, t: int) -> Column:
-    """Join condition for table ``t`` over two qualified aliases:
-    buckets agree on table t and DISAGREE on every earlier table —
-    each candidate pair survives in exactly one branch. Static column
-    predicates (the table index is known per branch), so pair dedup
-    costs no HOF evaluation and no distinct shuffle over
-    vector-carrying candidate rows. One parsed expression per branch:
-    the Column-API form was ~60 py4j round trips across the branch
-    set (driver plan-construction tax; the _scored_cells note)."""
-    parts = [f"`{a}`._b{t} = `{b}`._b{t}"] + [
-        f"`{a}`._b{s} != `{b}`._b{s}" for s in range(t)
+def _lsh_candidates(
+    left: DataFrame, right: DataFrame, roles: str, num_tables: int, id_op: str
+) -> DataFrame:
+    """The LSH candidate generator over two :func:`_signed` tables:
+    the union, over tables t, of ``left ⋈ right`` where the buckets
+    agree on table t and DISAGREE on every earlier table — each pair
+    survives in exactly one branch, so dedup costs no distinct shuffle
+    over vector-carrying rows — and ``left.id id_op right.id`` (``!=``
+    drops self pairs, ``<`` keeps one order of a pair). The two
+    sides are aliased by ``roles`` (``"qc"`` or ``"ab"``) and come out
+    as those roles' (id, vector, norm) columns. Each branch condition
+    is one parsed expression: the Column-API form was ~60 py4j round
+    trips across the branch set."""
+    a, b = roles
+    lhs, rhs = left.alias(a), right.alias(b)
+    cols = [
+        f"`{r}`.{src} AS {dst}"
+        for r in roles
+        for src, dst in zip(_ROLES[""], _ROLES[r])
     ]
-    return F.expr(" AND ".join(parts))
+    branches = []
+    for t in range(num_tables):
+        cond = (
+            [f"`{a}`._b{t} = `{b}`._b{t}"]
+            + [f"`{a}`._b{s} != `{b}`._b{s}" for s in range(t)]
+            + [f"`{a}`.id {id_op} `{b}`.id"]
+        )
+        branches.append(lhs.join(rhs, F.expr(" AND ".join(cond))).selectExpr(*cols))
+    return reduce(DataFrame.unionByName, branches)
 
 
 def lsh_bucket_topk(
@@ -398,44 +409,41 @@ def lsh_bucket_topk(
     probes one bucket per table. Recall < 1.0 by design — exact
     :func:`cosine_topk` is the baseline.
     """
-    q = _signed(queries, id_col, vec_col, num_tables, num_planes, dim, seed).alias("q")
-    c = _signed(corpus, id_col, vec_col, num_tables, num_planes, dim, seed).alias("c")
-    branches = []
-    for t in range(num_tables):
-        branches.append(
-            F.broadcast(q)
-            .join(
-                c,
-                _first_collision_cond("q", "c", t)
-                & (F.col("q.id") != F.col("c.id")),
-            )
-            .select(
-                F.col("q.id").alias("query_id"),
-                F.col("c.id").alias("neighbor_id"),
-                F.col("q._v").alias("_qv"),
-                F.col("c._v").alias("_cv"),
-                F.col("q._n").alias("_qn"),
-                F.col("c._n").alias("_cn"),
-            )
-        )
-    cand = branches[0]
-    for b in branches[1:]:
-        cand = cand.unionByName(b)
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _paired_cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    q = _signed(queries, id_col, vec_col, num_tables, num_planes, dim, seed)
+    c = _signed(corpus, id_col, vec_col, num_tables, num_planes, dim, seed)
+    cand = _lsh_candidates(F.broadcast(q), c, "qc", num_tables, "!=")
+    return _top_k(_score(cand), k)
+
+
+def _projector(components: list[list[float]], mean: list[float] | None = None):
+    """Pandas UDF projecting a vector column through a FIXED p×dim
+    matrix, with optional centering. Arrow-batched numpy — the dense
+    vector×matrix case :func:`_signed` documents as the one place
+    Python beats the JVM fold (p folds/row would be thousands of
+    interpreted lambda steps). Unlike ``_signed``'s bucket keys
+    (partitioning metadata), these values RANK candidates, so they
+    must be partition-invariant: the kernel is a per-row GEMV of fixed
+    shape (1×dim @ dim×p) — identical BLAS path and summation order
+    for every row — NOT one batch GEMM, whose blocking (and thus ULP
+    rounding) varies with the batch's row count and could flip a tie
+    at the n_cand frontier."""
+    pmat = np.asarray(components, dtype=np.float64).T  # dim × p
+    mvec = None if mean is None else np.asarray(mean, dtype=np.float64)
+
+    @F.pandas_udf("array<double>")
+    def _proj(vecs: pd.Series) -> pd.Series:
+        v = np.stack(vecs.to_numpy()).astype(np.float64)
+        if mvec is not None:
+            v = v - mvec
+        return pd.Series([row @ pmat for row in v])
+
+    return _proj
+
+
+def _rp_planes(r: int, dim: int, seed: int) -> list[list[float]]:
+    """The r seeded JL planes (same LCG as LSH — no RNG, identical on
+    any cluster size or run)."""
+    return [_hyperplane(dim, seed + 31 * j) for j in range(r)]
 
 
 def rp_project(
@@ -446,38 +454,9 @@ def rp_project(
     dim: int = 64,
     seed: int = 77,
 ) -> DataFrame:
-    """Johnson–Lindenstrauss random projection: (id, _v, _n, _p)
-    where ``_p`` is the vector's image under a deterministic dim×r
-    matrix (same LCG planes as LSH — no RNG, identical on any
-    cluster size or run).
-
-    Projection is Arrow-batched numpy — the same dense
-    vector×matrix case :func:`_signed` documents as the one place
-    Python beats the JVM fold (r folds/row would be thousands of
-    interpreted lambda steps). Unlike ``_signed``'s bucket keys
-    (partitioning metadata), these values RANK candidates, so they
-    must be partition-invariant: the kernel is a per-row GEMV of
-    fixed shape (1×dim @ dim×r) — identical BLAS path and summation
-    order for every row — NOT one batch GEMM, whose blocking (and
-    thus ULP rounding) varies with the batch's row count and could
-    flip a tie at the n_cand frontier. ``_n`` (the FULL-dim norm)
-    stays a JVM fold so downstream exact re-ranks bit-match
-    :func:`cosine_topk`.
-    """
-    planes = [_hyperplane(dim, seed + 31 * j) for j in range(r)]
-    pmat = np.asarray(planes, dtype=np.float64).T  # dim × r
-
-    @F.pandas_udf("array<double>")
-    def _proj(vecs: pd.Series) -> pd.Series:
-        v = np.stack(vecs.to_numpy()).astype(np.float64)  # batch × dim
-        return pd.Series([row @ pmat for row in v])
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        _proj(F.col(vec_col)).alias("_p"),
-    )
+    """Johnson–Lindenstrauss random projection: (id, _v, _n, _p) —
+    :func:`mat_project` through the seeded dim×r planes."""
+    return mat_project(df, _rp_planes(r, dim, seed), None, id_col, vec_col)
 
 
 def rp_topk(
@@ -509,57 +488,34 @@ def rp_topk(
     """
     if n_cand < k:
         raise ValueError(f"n_cand ({n_cand}) must be >= k ({k})")
-    q = rp_project(queries, r, id_col, vec_col, dim, seed)
-    c = rp_project(corpus, r, id_col, vec_col, dim, seed)
-    return _projected_topk(q, c, k, n_cand)
+    return _projected_topk(
+        corpus, queries, _rp_planes(r, dim, seed), k, n_cand, id_col, vec_col
+    )
 
 
-def _projected_topk(q: DataFrame, c: DataFrame, k: int, n_cand: int) -> DataFrame:
+def _projected_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    components: list[list[float]],
+    k: int,
+    n_cand: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
     """The shared compressed-candidates probe behind rp_topk and
-    pca_topk: score in the projected space (``_p``), keep ``n_cand``
-    per query, exact full-dim cosine re-rank of that bounded set.
-    Inputs are (id, _v, _n, _p) frames from rp_project/mat_project;
-    tiebreaks on neighbor id at both stages — partition-invariant."""
-    q = q.alias("q")
-    c = c.alias("c")
-    proj_sim = dot(F.col("q._p"), F.col("c._p")) / (
-        l2_norm(F.col("q._p")) * l2_norm(F.col("c._p"))
+    pca_topk: score in the space projected through ``components``
+    (``_qp``/``_cp``), keep ``n_cand`` per query, exact full-dim cosine
+    re-rank of that bounded set. Both stages are :func:`_top_k`, so
+    both tiebreak on neighbor id — partition-invariant."""
+    proj = _projector(components)
+    vec = F.col(quote_ident(vec_col))
+    q = _side(queries, "q", id_col, vec_col, proj(vec).alias("_qp"))
+    c = _side(corpus, "c", id_col, vec_col, proj(vec).alias("_cp"))
+    proj_sim = f"{_dot_sql('_qp', '_cp')} / ({_l2_sql('_qp')} * {_l2_sql('_cp')})"
+    cand = _candidates(q, c).selectExpr(
+        "query_id", "neighbor_id", f"{proj_sim} AS _ps", "_qv", "_cv", "_qn", "_cn"
     )
-    cand = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("q.id") != F.col("c.id"))
-        .select(
-            F.col("q.id").alias("query_id"),
-            F.col("c.id").alias("neighbor_id"),
-            proj_sim.alias("_ps"),
-            F.col("q._v").alias("_qv"),
-            F.col("c._v").alias("_cv"),
-            F.col("q._n").alias("_qn"),
-            F.col("c._n").alias("_cn"),
-        )
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("_ps").desc(), F.col("neighbor_id").asc()
-    )
-    kept = cand.withColumn("_crk", F.row_number().over(wc)).where(
-        F.col("_crk") <= n_cand
-    )
-    scored = kept.select(
-        "query_id",
-        "neighbor_id",
-        _paired_cosine(F.col("_qv"), F.col("_cv"), F.col("_qn"), F.col("_cn")).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(_score(_top_k(cand, n_cand, "_ps")), k)
 
 
 def cosine_near_dup_pairs(
@@ -575,26 +531,12 @@ def cosine_near_dup_pairs(
     ``max_rows`` input rows (bounded count at call time) so the
     labeled baseline can't be pointed at a corpus by accident."""
     corpus = scale_guard(corpus, max_rows, "cosine_near_dup_pairs")
-    a = corpus.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        l2_norm(F.col(vec_col)).alias("_na"),
-    )
-    b = corpus.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        l2_norm(F.col(vec_col)).alias("_nb"),
-    )
+    a = _side(corpus, "a", id_col, vec_col)
+    b = _side(corpus, "b", id_col, vec_col)
     return (
         a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            _paired_cosine(
-                F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")
-            ).alias("cos_sim"),
-        )
+        .where("id_a < id_b")
+        .selectExpr("id_a", "id_b", f"{_AB_COSINE} AS cos_sim")
         .where(F.col("cos_sim") >= threshold)
     )
 
@@ -640,26 +582,7 @@ def lsh_near_dup_pairs(
         if signed is not None
         else _signed(corpus, id_col, vec_col, num_tables, num_planes, dim, seed)
     )
-    left, right = s.alias("a"), s.alias("b")
-    branches = []
-    for t in range(num_tables):
-        branches.append(
-            left.join(
-                right,
-                _first_collision_cond("a", "b", t)
-                & (F.col("a.id") < F.col("b.id")),
-            ).select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                F.col("a._v").alias("_va"),
-                F.col("b._v").alias("_vb"),
-                F.col("a._n").alias("_na"),
-                F.col("b._n").alias("_nb"),
-            )
-        )
-    cand = branches[0]
-    for b in branches[1:]:
-        cand = cand.unionByName(b)
+    cand = _lsh_candidates(s, s, "ab", num_tables, "<")
 
     @F.pandas_udf("double")
     def _pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -672,12 +595,8 @@ def lsh_near_dup_pairs(
         _pair_dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
         >= cut
     )
-    return sketched.select(
-        "id_a",
-        "id_b",
-        _paired_cosine(F.col("_va"), F.col("_vb"), F.col("_na"), F.col("_nb")).alias(
-            "cos_sim"
-        ),
+    return sketched.selectExpr(
+        "id_a", "id_b", f"{_AB_COSINE} AS cos_sim"
     ).where(F.col("cos_sim") >= threshold)
 
 
@@ -711,18 +630,12 @@ def _scored_cells(vec: str, cents: list[list[float]]) -> Column:
     built (same casts, same sequential fold, same double literals via
     repr round-trip), so every emitted value is bit-identical.
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
     vec_q = quote_ident(vec)
     cells = []
     for i, c in enumerate(cents):
         norm = float(sum(x * x for x in c) ** 0.5)
-        d = (
-            f"aggregate(zip_with({vec_q}, {_array_lit_sql(c)}, "
-            "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-            "0.0D, (acc, x) -> acc + x)"
-        )
-        cells.append(f"struct(-({d} / {float(norm)!r}D) AS neg, {i} AS i)")
+        d = _dot_sql(vec_q, _array_lit_sql(c))
+        cells.append(f"struct(-({d} / {norm!r}D) AS neg, {i} AS i)")
     return F.expr("array(" + ", ".join(cells) + ")")
 
 
@@ -742,66 +655,37 @@ def assign_cluster(vec: str, cents: list[list[float]]) -> Column:
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    centroids: list[list[float]],
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 16,
     n_probe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN: corpus vectors live in their nearest-centroid cell;
     each query probes its ``n_probe`` nearest cells and re-ranks
-    exactly within them. ``n_probe == n_centroids`` degrades to the
+    exactly within them. ``n_probe == len(centroids)`` degrades to the
     exact brute force (the test invariant); smaller n_probe trades
-    recall for a ~n_probe/n_centroids candidate fraction.
+    recall for a ~n_probe/len(centroids) candidate fraction.
 
-    ``centroids`` overrides the seeded random codebook — pass
-    :func:`kmeans_train` output for a trained index (better recall at
-    the same n_probe: cells then follow the data distribution).
+    ``centroids`` is the coarse codebook: :func:`kmeans_train` output
+    for a trained index (better recall at the same n_probe: cells
+    then follow the data distribution), or the seeded random
+    :func:`_centroids`.
 
     Scale shape: corpus is hash-partitioned by cell (one shuffle,
     done once and cacheable); queries broadcast; no cross join."""
-    cents = centroids if centroids is not None else _centroids(n_centroids, dim, seed)
     # repartition = the IVF index shape (corpus co-located by cell)
     # AND an exchange barrier so Catalyst's projection collapse can't
     # inline the 16-fold assignment into the join and re-evaluate it
     # per candidate row
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    vq = quote_ident(vec_col)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-        F.expr(_l2_sql(vq)).alias("_cn"),
-        assign_cluster(vec_col, cents).alias("cell"),
+    c = _side(
+        corpus, "c", id_col, vec_col, assign_cluster(vec_col, centroids).alias("cell")
     ).repartition("cell")
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
-        F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
+    q = _side(
+        queries, "q", id_col, vec_col,
+        F.explode(probe_clusters(vec_col, centroids, n_probe)).alias("cell"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .selectExpr(
-            "query_id",
-            "neighbor_id",
-            f"{_paired_cosine_sql('_qv', '_cv', '_qn', '_cn')} AS cos_sim",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    return _top_k(_score(_candidates(q, c, "cell")), k)
 
 
 def build_lsh_index(
@@ -825,8 +709,6 @@ def build_lsh_index(
     ``lsh_near_dup_pairs(signed=...)``. Incremental corpora append
     newly-signed rows (same seed ⇒ same planes ⇒ compatible keys).
     """
-    import json
-
     from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
     from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
@@ -851,8 +733,6 @@ def load_lsh_index(spark, path: str) -> tuple[DataFrame, dict]:
     parameter of the LSH operators and the meta values to their
     matching parameters (mismatched planes would silently bucket with
     the wrong geometry — always thread the stored meta through)."""
-    import json
-
     from dbm_nca_ph_etl_spark.sources.lakefs import get_fs
     from dbm_nca_ph_etl_spark.sources.lakefs import join as _pjoin
 
@@ -895,64 +775,39 @@ def probe_near_dup_pairs(
     Replaces a per-pair interpreted 3-fold cosine over |probe|·n pairs
     (measured 9.7 s at sf0.1) with BLAS + ~10² exact folds (~0.5 s).
     """
-    probe_rows = (
-        corpus.where(
-            (F.col(id_col) % probe_mod == 0) & (F.col(id_col) < probe_cap)
-        )
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .collect()
+    probe = _side(corpus, "a", id_col, vec_col).where(
+        f"id_a % {probe_mod} = 0 AND id_a < {probe_cap}"
     )
-    probe_ids = np.asarray([r._id for r in probe_rows], dtype=np.int64)
-    pmat = np.stack([np.asarray(r._v, dtype=np.float64) for r in probe_rows])
+    probe_rows = probe.select("id_a", "_va").collect()
+    probe_ids = np.asarray([r.id_a for r in probe_rows], dtype=np.int64)
+    pmat = np.stack([np.asarray(r._va, dtype=np.float64) for r in probe_rows])
     pnorm = np.sqrt((pmat * pmat).sum(axis=1))
     cut = threshold - margin
 
     def gen(batches):
         for b in batches:
-            ids = b[id_col].to_numpy()
-            v = np.stack(b[vec_col].to_numpy()).astype(np.float64)
+            ids = b["id_b"].to_numpy()
+            v = np.stack(b["_vb"].to_numpy()).astype(np.float64)
             vnorm = np.sqrt((v * v).sum(axis=1))
             cos = (v @ pmat.T) / np.outer(vnorm, pnorm)
             rows, cols = np.nonzero(cos >= cut)
             yield pd.DataFrame(
-                {"_id_o": ids[rows].astype("int64"), "_id_s": probe_ids[cols]}
+                {"id_b": ids[rows].astype("int64"), "id_a": probe_ids[cols]}
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        gen, schema="_id_o long, _id_s long"
-    ).where(F.col("_id_o") != F.col("_id_s"))
-
-    sides = corpus.select(
-        F.col(id_col).alias("_jid"),
-        F.col(vec_col).alias("_jv"),
-        l2_norm(F.col(vec_col)).alias("_jn"),
-    )
-    probe_sides = sides.where(
-        (F.col("_jid") % probe_mod == 0) & (F.col("_jid") < probe_cap)
+    others = _side(corpus, "b", id_col, vec_col)
+    cand = (
+        others.select("id_b", "_vb")
+        .mapInPandas(gen, schema="id_b long, id_a long")
+        .where("id_a != id_b")
     )
     return (
-        cand.join(
-            F.broadcast(probe_sides.select(
-                F.col("_jid").alias("_id_s"),
-                F.col("_jv").alias("_vs"),
-                F.col("_jn").alias("_ns"),
-            )),
-            "_id_s",
-        )
-        .join(
-            sides.select(
-                F.col("_jid").alias("_id_o"),
-                F.col("_jv").alias("_vo"),
-                F.col("_jn").alias("_no"),
-            ),
-            "_id_o",
-        )
-        .select(
-            F.least("_id_s", "_id_o").alias("id_a"),
-            F.greatest("_id_s", "_id_o").alias("id_b"),
-            _paired_cosine(
-                F.col("_vs"), F.col("_vo"), F.col("_ns"), F.col("_no")
-            ).alias("cos_sim"),
+        cand.join(F.broadcast(probe), "id_a")
+        .join(others, "id_b")
+        .selectExpr(
+            "least(id_a, id_b) AS id_a",
+            "greatest(id_a, id_b) AS id_b",
+            f"{_AB_COSINE} AS cos_sim",
         )
         .where(F.col("cos_sim") >= threshold)
         .dropDuplicates(["id_a", "id_b"])
@@ -989,13 +844,13 @@ def kmeans_train(
     """
     cents = _centroids(k, dim, seed)
     objectives: list[float] = []
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec_d = F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double"))
     for _ in range(iters):
         best = F.element_at(F.array_sort(_scored_cells("_v", cents)), 1)
         assigned = corpus.select(vec_d.alias("_v")).select(
             "_v",
             best.getField("i").alias("cell"),
-            (-best.getField("neg") / l2_norm(F.col("_v"))).alias("_cos"),
+            (-best.getField("neg") / F.expr(_l2_sql("_v"))).alias("_cos"),
         )
         stats = assigned.groupBy("cell").agg(
             F.count(F.lit(1)).alias("n"),
@@ -1064,9 +919,7 @@ def quantize_int8_audit(
     once per row, and all HOF folds run sequentially over the array
     (deterministic order — never a float sum across partitions).
     """
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double"))
 
     def with_q(vd: Column, scale: Column, q: Column) -> Column:
         idx = F.sequence(F.lit(1), F.size(vd))
@@ -1104,7 +957,7 @@ def quantize_int8_audit(
 
     s = let(v, build)
     return corpus.select(
-        F.col(id_col),
+        F.col(quote_ident(id_col)),
         s.getField("scale_e9").alias("scale_e9"),
         s.getField("q_l1").alias("q_l1"),
         s.getField("q_checksum").alias("q_checksum"),
@@ -1113,26 +966,36 @@ def quantize_int8_audit(
     )
 
 
-def _int8_cols(df: DataFrame, id_alias: str, id_col: str, vec_col: str):
-    """(id, int8 array, integer L2-squared) projection — the quantized
-    probe representation. Scales cancel out of the cosine ratio, so
-    ranking needs only integer dot products and integer norms."""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+def _int8_cols(df: DataFrame, role: str, id_col: str, vec_col: str) -> DataFrame:
+    """:func:`_side` plus the quantized probe representation: the int8
+    array ``_{role}i`` and its integer L2-squared ``_{role}i2`` (the raw
+    vector and norm go unread and are pruned). Scales cancel out of
+    the cosine ratio, so ranking needs only integer dot products and
+    integer norms."""
+    v = F.transform(F.col(quote_ident(vec_col)), lambda x: x.cast("double"))
 
     def build(vd: Column) -> Column:
         scale = F.array_max(F.transform(vd, F.abs)) / F.lit(127.0)
         return let(scale, lambda sc: _quantized(vd, sc, "long"))
 
     q = let(v, build)
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        q.alias("_q"),
-        F.aggregate(
-            q, F.lit(0).cast("long"), lambda a, x: a + x * x
-        ).alias("_qn2"),
+    return _side(
+        df, role, id_col, vec_col,
+        q.alias(f"_{role}i"),
+        F.aggregate(q, F.lit(0).cast("long"), lambda a, x: a + x * x).alias(
+            f"_{role}i2"
+        ),
     )
+
+
+#: The int8 scorer: an exact int64 dot product of the int8 codes
+#: (64·127² per term, no float accumulation) over the integer norms,
+#: with one double sqrt at the end.
+_INT8_COSINE = (
+    "round(CAST(aggregate(zip_with(_qi, _ci, (a, b) -> a * b), 0L, "
+    "(acc, x) -> acc + x) AS DOUBLE) "
+    "/ SQRT(CAST(_qi2 AS DOUBLE) * CAST(_ci2 AS DOUBLE)), 6)"
+)
 
 
 def int8_topk(
@@ -1145,51 +1008,18 @@ def int8_topk(
     """Top-k cosine retrieval over int8-QUANTIZED vectors — the probe
     that actually runs once :func:`quantize_int8_audit`'s compression
     is in place: per-vector scales cancel from the cosine ratio, so
-    scoring is an INTEGER dot product over integer norms (zip_with +
-    sequential fold, exact int64 — 64·127² per term, no float
-    accumulation) with one double sqrt at the end. Same broadcast-
-    queries × corpus map-only shape as :func:`cosine_topk`; at scale
-    the corpus side reads the 4×-smaller int8 representation.
+    scoring is an INTEGER dot product over integer norms
+    (``_INT8_COSINE``). Same broadcast-queries × corpus map-only shape
+    as :func:`cosine_topk`; at scale the corpus side reads the
+    4×-smaller int8 representation.
 
     Approximate only through quantization noise (~1e-3 on cosine), so
     it ships as a recall-bound audit against the exact top-k
     (plans/queries.ann_int8_topk) like the LSH/IVF probes.
     """
-    q = _int8_cols(queries, "query_id", id_col, vec_col)
-    c = _int8_cols(corpus, "neighbor_id", id_col, vec_col)
-    dot = F.aggregate(
-        F.zip_with("_q", "_cq", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(
-            c.select(
-                "neighbor_id",
-                F.col("_q").alias("_cq"),
-                F.col("_qn2").alias("_cn2"),
-            )
-        )
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                dot.cast("double")
-                / F.sqrt(F.col("_qn2").cast("double") * F.col("_cn2").cast("double")),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    q = _int8_cols(queries, "q", id_col, vec_col)
+    c = _int8_cols(corpus, "c", id_col, vec_col)
+    return _top_k(_score(_candidates(q, c), _INT8_COSINE), k)
 
 
 # -----------------------------------------------------------------------
@@ -1226,8 +1056,6 @@ def _pq_argmin(
     struct-array predecessor built ~10k expression nodes: ~10 s of
     driver-side py4j+analysis per invocation and an interpreted-
     fallback eval — the exact trap the module header documents.)"""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     book = F.element_at(b3, s + 1)  # array<array<double>>[k]
     d2 = lambda j: F.aggregate(  # noqa: E731
         F.sequence(F.lit(0), F.lit(d_sub - 1)),
@@ -1288,15 +1116,15 @@ def pq_train(
     sample, numpy argmin first-index tiebreaks; empty cells keep
     their previous centroid.
     """
-    import numpy as np
-
     d_sub = dim // m
     if m * d_sub != dim:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     rows = (
         corpus.select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+            F.col(quote_ident(id_col)).alias("_id"),
+            F.transform(
+                F.col(quote_ident(vec_col)), lambda x: x.cast("double")
+            ).alias("_v"),
         )
         .orderBy("_id")
         .limit(sample_cap)
@@ -1341,12 +1169,10 @@ def pq_encode(
     running the :func:`_pq_argmin` fold — O(1) lambdas total, so the
     plan stays constant-size at any m×k (see _pq_argmin on why the
     unrolled alternative is 10-40× slower end-to-end)."""
-    from dbm_nca_ph_etl_spark.functions.scalars import let
-
     m = len(books)
     k = len(books[0])
     d_sub = len(books[0][0])
-    raw = F.col(vec_col)
+    raw = F.col(quote_ident(vec_col))
     b3 = _books_lit(books)
     n2 = _norms_lit(books)
     codes = F.transform(
@@ -1369,7 +1195,7 @@ def pq_encode(
         ),
     )
     return df.select(
-        F.col(id_col).alias(id_alias),
+        F.col(quote_ident(id_col)).alias(id_alias),
         packed.getField("codes").alias("_codes"),
         packed.getField("rn2").alias("_rn2"),
         *(extra_cols or []),
@@ -1409,8 +1235,6 @@ def pq_topk(
     Approximate through quantization only → ships as a recall-bound
     audit (plans/queries.ann_pq_topk) like the int8/LSH/IVF probes.
     """
-    m = len(books)
-    d_sub = len(books[0][0])
     c = (
         encoded
         if encoded is not None
@@ -1424,34 +1248,14 @@ def pq_topk(
         # skips it entirely.
         .repartition(F.col("neighbor_id"))
     )
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    vq = quote_ident(vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pq_adc_cosine(books).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    q = _side(queries, "q", id_col, vec_col)
+    return _top_k(_score(_candidates(q, c), _pq_adc_cosine_sql(books)), k)
 
 
-def _pq_adc_cosine(books: list[list[list[float]]]) -> Column:
-    """Asymmetric-distance cosine over joined (query, coded-corpus)
-    rows carrying ``_qv``/``_qn``/``_codes``/``_rn2``: one flat fold
+def _pq_adc_cosine_sql(books: list[list[list[float]]]) -> str:
+    """The PQ scorer: asymmetric-distance cosine over joined (query,
+    coded-corpus) rows carrying ``_qv``/``_qn``/``_codes``/``_rn2``
+    (a query element widens to double in the product): one flat fold
     over the dim positions — per position p, query element × the
     coded centroid's element (three ``element_at`` hops into the
     constant-folded codebook literal). Same left-to-right summation
@@ -1459,12 +1263,9 @@ def _pq_adc_cosine(books: list[list[list[float]]]) -> Column:
     are bit-identical — but the expression tree is O(1) lambdas
     instead of ~10k unrolled nodes (see :func:`_pq_argmin`).
 
-    Emitted as ONE parsed SQL expression (r12, the _scored_cells
-    driver-tax treatment): the text parses to the operator-identical
-    tree the Column/``let`` form built — same sequence fold, same
-    let-binding (element_at∘transform∘array), same casts and double
-    literals via repr round-trip — so every score is bit-identical,
-    while plan construction is a single py4j call instead of ~40."""
+    SQL text, like every scorer here: the let-binding of the
+    subspace index is element_at∘transform∘array, and plan
+    construction is one parse instead of ~40 py4j calls."""
     m = len(books)
     d_sub = len(books[0][0])
     b3_sql = _json_lit_sql(books, "array<array<array<double>>>")
@@ -1478,72 +1279,47 @@ def _pq_adc_cosine(books: list[list[list[float]]]) -> Column:
         f"CAST(p % {d_sub} + 1 AS INT))), 1))"
     )
     denom = "(_qn * SQRT(_rn2))"
-    return F.expr(
-        f"CASE WHEN {denom} > 0 THEN round(({adc}) / {denom}, 6) "
-        "ELSE 0.0D END"
-    )
+    return f"CASE WHEN {denom} > 0 THEN round(({adc}) / {denom}, 6) ELSE 0.0D END"
 
 
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     books: list[list[list[float]]],
+    centroids: list[list[float]],
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = 16,
     n_probe: int = 4,
-    dim: int = 64,
-    seed: int = 42,
-    centroids: list[list[float]] | None = None,
     encoded: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ — the composed 100 TB ANN index (the FAISS ``IVFx,PQy``
     shape): a coarse IVF quantizer prunes the CANDIDATE SET (each
-    query probes ``n_probe`` of ``n_centroids`` cells — a
-    ~n_probe/n_centroids fraction of the corpus, via a cell-key hash
-    join, never a cross join) and PQ codes compress the
+    query probes ``n_probe`` of the ``centroids`` cells — a
+    ~n_probe/len(centroids) fraction of the corpus, via a cell-key
+    hash join, never a cross join) and PQ codes compress the
     REPRESENTATION scored inside those cells (ADC — m small ints per
     vector instead of dim floats). The two approximations compose
     orthogonally: IVF bounds compute, PQ bounds memory/IO; at 100 TB
     both bounds are mandatory, which is why this is the industry-
     standard layout for billion-vector indexes.
 
-    ``centroids`` takes a :func:`kmeans_train` codebook for the
-    coarse level; ``encoded`` takes a persisted :func:`ivfpq_encode`
-    table (build-once/probe-often). Corpus-side work per probe:
-    scan codes of probed cells only.
+    ``centroids`` is the coarse codebook (:func:`kmeans_train` or
+    :func:`_centroids`); ``encoded`` takes a persisted
+    :func:`ivfpq_encode` table built with the same codebooks
+    (build-once/probe-often). Corpus-side work per probe: scan codes
+    of probed cells only.
     """
-    cents = centroids if centroids is not None else _centroids(n_centroids, dim, seed)
     c = (
         encoded
         if encoded is not None
-        else ivfpq_encode(corpus, books, cents, id_col, vec_col)
+        else ivfpq_encode(corpus, books, centroids, id_col, vec_col)
     )
-    from dbm_nca_ph_etl_spark.functions.scalars import quote_ident
-
-    vq = quote_ident(vec_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(f"transform({vq}, x -> CAST(x AS DOUBLE))").alias("_qv"),
-        F.expr(_l2_sql(vq)).alias("_qn"),
-        F.explode(probe_clusters(vec_col, cents, n_probe)).alias("cell"),
+    q = _side(
+        queries, "q", id_col, vec_col,
+        F.explode(probe_clusters(vec_col, centroids, n_probe)).alias("cell"),
     )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", _pq_adc_cosine(books).alias("cos_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.select(
-        "query_id",
-        "neighbor_id",
-        "cos_sim",
-        F.row_number().over(w).alias("rank"),
-    ).where(F.col("rank") <= k)
+    return _top_k(_score(_candidates(q, c, "cell"), _pq_adc_cosine_sql(books)), k)
 
 
 def ivfpq_encode(
@@ -1607,30 +1383,23 @@ def mmr_rerank(
     rel = cand.select(
         "query_id", "neighbor_id", e6(F.col("cos_sim")).alias("rel_e6")
     ).localCheckpoint(eager=True)
-    cv = rel.join(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_v"),
-            l2_norm(F.col(vec_col)).alias("_n"),
-        ),
-        "neighbor_id",
-    ).select("query_id", "neighbor_id", "_v", "_n")
-    x, y = cv.alias("x"), cv.alias("y")
+    cv = rel.join(_side(corpus, "c", id_col, vec_col), "neighbor_id").select(
+        "query_id", "neighbor_id", "_cv", "_cn"
+    )
+    lhs, rhs = cv.alias("l"), cv.alias("r")
     pair_sims = (
-        x.join(
-            y,
-            (F.col("x.query_id") == F.col("y.query_id"))
-            & (F.col("x.neighbor_id") != F.col("y.neighbor_id")),
+        lhs.join(
+            rhs,
+            (F.col("l.query_id") == F.col("r.query_id"))
+            & (F.col("l.neighbor_id") != F.col("r.neighbor_id")),
         )
         .select(
-            F.col("x.query_id").alias("query_id"),
-            F.col("x.neighbor_id").alias("a"),
-            F.col("y.neighbor_id").alias("b"),
-            e6(
-                _paired_cosine(
-                    F.col("x._v"), F.col("y._v"), F.col("x._n"), F.col("y._n")
-                )
-            ).alias("sim_e6"),
+            F.col("l.query_id").alias("query_id"),
+            F.col("l.neighbor_id").alias("a"),
+            F.col("r.neighbor_id").alias("b"),
+            e6(F.expr(_paired_cosine_sql("l._cv", "r._cv", "l._cn", "r._cn"))).alias(
+                "sim_e6"
+            ),
         )
         .localCheckpoint(eager=True)
     )
@@ -1748,14 +1517,7 @@ def margin_topk(
         .join(F.broadcast(nsum), "neighbor_id")
         .select("query_id", "neighbor_id", margin.alias("margin_ppm"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("margin_ppm").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= m)
-        .select("query_id", "neighbor_id", "margin_ppm", "rank")
-    )
+    return _top_k(scored, m, "margin_ppm")
 
 
 # ---------------------------------------------------------------------------
@@ -1808,7 +1570,7 @@ def gram_sums(
 
     def part(batches):
         for pdf in batches:
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = np.stack(pdf["_v"].to_numpy()).astype(np.float64)
             Q = np.floor(X * float(scale) + 0.5).astype(np.int64)
             if np.abs(Q).max(initial=0) > _PCA_Q_MAX:
                 raise ValueError(
@@ -1828,7 +1590,7 @@ def gram_sums(
             )
 
     return (
-        corpus.select(vec_col)
+        corpus.selectExpr(f"{quote_ident(vec_col)} AS _v")
         .mapInPandas(part, "i int, j int, s long")
         .groupBy("i", "j")
         .agg(F.sum(F.col("s").cast("decimal(38,0)")).alias("moment_sum"))
@@ -1902,28 +1664,15 @@ def mat_project(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Project vectors through a FIXED p×dim matrix with optional
-    centering — the trained-projection twin of :func:`rp_project`
-    (which is this kernel with seeded random planes). Same per-row
-    GEMV discipline: values are partition-invariant because the
-    kernel never batches rows into one GEMM whose blocking could move
-    a ULP at the candidate frontier; the full-dim norm stays a JVM
-    fold so exact re-ranks bit-match :func:`cosine_topk`."""
-    pmat = np.asarray(components, dtype=np.float64).T  # dim × p
-    mvec = None if mean is None else np.asarray(mean, dtype=np.float64)
-
-    @F.pandas_udf("array<double>")
-    def _proj(vecs: pd.Series) -> pd.Series:
-        v = np.stack(vecs.to_numpy()).astype(np.float64)
-        if mvec is not None:
-            v = v - mvec
-        return pd.Series([row @ pmat for row in v])
-
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("_v"),
-        l2_norm(F.col(vec_col)).alias("_n"),
-        _proj(F.col(vec_col)).alias("_p"),
+    """(id, _v, _n, _p): vectors projected through a FIXED p×dim
+    matrix with optional centering (the per-row GEMV of
+    :func:`_projector`, so values are partition-invariant). The
+    full-dim norm ``_n`` stays a JVM fold so exact re-ranks bit-match
+    :func:`cosine_topk`. :func:`rp_project` is this with seeded
+    random planes."""
+    proj = _projector(components, mean)
+    return _side(
+        df, "", id_col, vec_col, proj(F.col(quote_ident(vec_col))).alias("_p")
     )
 
 
@@ -1967,9 +1716,7 @@ def pca_topk(
             "the raw cosines the candidate ranking runs on — pass the "
             "center=False model rather than silently degrading recall"
         )
-    q = mat_project(queries, comps, None, id_col, vec_col)
-    c = mat_project(corpus, comps, None, id_col, vec_col)
-    return _projected_topk(q, c, k, n_cand)
+    return _projected_topk(corpus, queries, comps, k, n_cand, id_col, vec_col)
 
 
 def eval_weight_tables(k: int) -> tuple[list[int], list[int]]:
@@ -1980,8 +1727,6 @@ def eval_weight_tables(k: int) -> tuple[list[int], list[int]]:
     evaluates a runtime log — the cross-engine bit-exactness trick
     the catalog uses everywhere (a 1-ULP ln() disagreement at a .5
     rounding boundary would otherwise flip a metric)."""
-    import math
-
     rr = [int(1_000_000 / r + 0.5) for r in range(1, k + 1)]
     dcg = [int(1_000_000 / math.log2(r + 1) + 0.5) for r in range(1, k + 1)]
     return rr, dcg

@@ -1687,7 +1687,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 10)
     return _ann_recall_audit(
-        S.ivf_topk(emb, q, k=10, n_centroids=16, n_probe=4),
+        S.ivf_topk(emb, q, S._centroids(16, 64, 42), k=10, n_probe=4),
         S.cosine_topk(emb, q, k=10),
         floor_hits=25,
     )
@@ -7670,8 +7670,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     return _ann_recall_audit(
         S.ivfpq_topk(
-            emb, q, books, k=10, n_centroids=16, n_probe=8,
-            centroids=cents, encoded=_PQ_MEMO[key],
+            emb, q, books, k=10, n_probe=8, centroids=cents,
+            encoded=_PQ_MEMO[key],
         ),
         S.cosine_topk(emb, q, k=10),
         floor_hits=20,

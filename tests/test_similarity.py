@@ -4,11 +4,27 @@ corpus, LSH recall against the exact baseline on real testdata."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
-from dbm_nca_ph_etl_spark.operators.similarity import cosine_topk, lsh_bucket_topk
+from dbm_nca_ph_etl_spark.operators.similarity import (
+    _centroids,
+    cosine_near_dup_pairs,
+    cosine_topk,
+    int8_topk,
+    ivf_topk,
+    ivfpq_topk,
+    lsh_bucket_topk,
+    lsh_near_dup_pairs,
+    pca_topk,
+    pq_topk,
+    pq_train,
+    probe_near_dup_pairs,
+    rp_topk,
+)
 
 
 @pytest.fixture(scope="module")
@@ -70,7 +86,9 @@ def test_ivf_full_probe_equals_exact(spark, sf_dir):
     )
     full_probe = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rank)
-        for r in ivf_topk(emb, queries, k=5, n_centroids=8, n_probe=8).collect()
+        for r in ivf_topk(
+            emb, queries, k=5, centroids=_centroids(8, 64, 42), n_probe=8
+        ).collect()
     )
     assert exact == full_probe
 
@@ -81,7 +99,9 @@ def test_ivf_partial_probe_subset(spark, sf_dir):
     from dbm_nca_ph_etl_spark.operators.similarity import ivf_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = ivf_topk(emb, emb.where("vec_id < 5"), k=5, n_centroids=8, n_probe=2)
+    out = ivf_topk(
+        emb, emb.where("vec_id < 5"), k=5, centroids=_centroids(8, 64, 42), n_probe=2
+    )
     counts = {r.query_id: r["count"] for r in out.groupBy("query_id").count().collect()}
     assert counts and all(c <= 5 for c in counts.values())
 
@@ -286,7 +306,7 @@ class TestIvfPq:
         full = {
             (r.query_id, r.neighbor_id, r.cos_sim)
             for r in ivfpq_topk(
-                emb, q, books, k=5, n_centroids=8, n_probe=8
+                emb, q, books, k=5, centroids=_centroids(8, 64, 42), n_probe=8
             ).collect()
         }
         plain = {
@@ -308,7 +328,7 @@ class TestIvfPq:
         got = {
             (r.query_id, r.neighbor_id)
             for r in ivfpq_topk(
-                emb, q, books, k=10, n_centroids=16, n_probe=8
+                emb, q, books, k=10, centroids=_centroids(16, 64, 42), n_probe=8
             ).collect()
         }
         exact = {
@@ -335,14 +355,13 @@ class TestIvfPq:
         via = {
             (r.query_id, r.neighbor_id, r.cos_sim)
             for r in ivfpq_topk(
-                emb, q, books, k=5, n_centroids=8, n_probe=4,
-                centroids=cents, encoded=enc,
+                emb, q, books, k=5, n_probe=4, centroids=cents, encoded=enc,
             ).collect()
         }
         inline = {
             (r.query_id, r.neighbor_id, r.cos_sim)
             for r in ivfpq_topk(
-                emb, q, books, k=5, n_centroids=8, n_probe=4, centroids=cents
+                emb, q, books, k=5, n_probe=4, centroids=cents
             ).collect()
         }
         assert via == inline
@@ -529,3 +548,97 @@ def test_scale_guard_rechecks_appended_files(spark, tmp_path):
     spark.range(3).write.mode("append").parquet(path)
     with pytest.raises(ValueError, match="refuses >4"):
         scale_guard(spark.read.parquet(path), 4, "guard_probe")
+
+
+# Column names with a dot are top-level columns, never struct fields:
+# every operator must resolve them the same way.
+_DOTTED = {"id_col": "vec.id", "vec_col": "emb.v"}
+
+_TOPK = {
+    "cosine": lambda c, q, k, books: cosine_topk(c, q, k, **_DOTTED),
+    "lsh": lambda c, q, k, books: lsh_bucket_topk(c, q, k, **_DOTTED),
+    "rp": lambda c, q, k, books: rp_topk(c, q, k, n_cand=50, **_DOTTED),
+    "pca": lambda c, q, k, books: pca_topk(c, q, k, p=8, n_cand=50, **_DOTTED),
+    "ivf": lambda c, q, k, books: ivf_topk(
+        c, q, _centroids(8, 64, 42), k, n_probe=2, **_DOTTED
+    ),
+    "int8": lambda c, q, k, books: int8_topk(c, q, k, **_DOTTED),
+    "pq": lambda c, q, k, books: pq_topk(c, q, books, k, **_DOTTED),
+    "ivfpq": lambda c, q, k, books: ivfpq_topk(
+        c, q, books, _centroids(8, 64, 42), k, n_probe=2, **_DOTTED
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def dotted(spark, sf_dir):
+    """The sf0.01 corpus with its id and vector under dotted names."""
+    path = os.path.join(os.path.dirname(sf_dir), "sf0.01", "embeddings.parquet")
+    return spark.read.parquet(path).select(
+        F.col("vec_id").alias("vec.id"), F.col("embedding").alias("emb.v")
+    )
+
+
+def _plain(dotted):
+    return dotted.select(
+        F.col("`vec.id`").alias("vec_id"), F.col("`emb.v`").alias("embedding")
+    )
+
+
+@pytest.fixture(scope="module")
+def dotted_books(dotted):
+    return pq_train(_plain(dotted), m=8, k=8, iters=2)
+
+
+@pytest.mark.parametrize("op", sorted(_TOPK))
+def test_topk_contract_on_dotted_names(dotted, dotted_books, op):
+    """Every top-k operator: schema (query_id, neighbor_id, cos_sim,
+    rank), no self pairs, ranks 1..n with n ≤ k per query, ordered by
+    cos_sim descending then neighbor_id ascending."""
+    k = 5
+    out = _TOPK[op](dotted, dotted.where("`vec.id` < 6"), k, dotted_books)
+    assert out.columns == ["query_id", "neighbor_id", "cos_sim", "rank"]
+    per_query: dict[int, list] = {}
+    for r in out.collect():
+        assert r.query_id != r.neighbor_id
+        per_query.setdefault(r.query_id, []).append(r)
+    assert per_query
+    for rows in per_query.values():
+        rows.sort(key=lambda r: r.rank)
+        assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+        assert len(rows) <= k
+        order = [(-r.cos_sim, r.neighbor_id) for r in rows]
+        assert order == sorted(order)
+
+
+def test_near_dup_pairs_on_dotted_names(dotted):
+    """The three near-dup operators give the same pairs under dotted
+    names as under plain ones."""
+    plain = _plain(dotted)
+    for op in (cosine_near_dup_pairs, lsh_near_dup_pairs, probe_near_dup_pairs):
+        got = sorted(op(dotted, threshold=0.3, **_DOTTED).collect())
+        assert got, op.__name__
+        assert got == sorted(op(plain, threshold=0.3).collect()), op.__name__
+
+
+def test_trainers_on_dotted_names(dotted):
+    """Codebook, model and quantization builders resolve dotted names
+    like the operators they feed."""
+    from dbm_nca_ph_etl_spark.operators.similarity import (
+        kmeans_train,
+        pca_train,
+        quantize_int8_audit,
+    )
+
+    plain = _plain(dotted)
+    vec = {"vec_col": "emb.v"}
+    assert pq_train(dotted, m=8, k=4, iters=1, **_DOTTED) == pq_train(
+        plain, m=8, k=4, iters=1
+    )
+    assert kmeans_train(dotted, k=4, iters=1, **vec) == kmeans_train(
+        plain, k=4, iters=1
+    )
+    assert pca_train(dotted, p=4, **vec) == pca_train(plain, p=4)
+    got = quantize_int8_audit(dotted, **_DOTTED)
+    assert got.columns[0] == "vec.id"
+    assert sorted(got.collect()) == sorted(quantize_int8_audit(plain).collect())
